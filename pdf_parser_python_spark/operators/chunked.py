@@ -252,11 +252,16 @@ def _chunk_and_pack(ex: DataFrame, meta: DataFrame,
     return packed
 
 
-def parse_giant_final(big: DataFrame, chunk_spans: int) -> DataFrame:
+def parse_giant_final(
+    big: DataFrame, chunk_spans: int, failures=None
+) -> DataFrame:
     """Packed giant documents → finalized QUESTION_FINAL rows via the
     vectorized kernel over anchor-aligned chunks; ``seq`` re-offset so
-    output rows equal the whole-document parse."""
-    return _kernel_and_stitch(packed_chunk_projection(big, chunk_spans))
+    output rows equal the whole-document parse. ``failures``: see
+    vkernel.parse_docs_final_arrow (counts failed chunks here)."""
+    return _kernel_and_stitch(
+        packed_chunk_projection(big, chunk_spans), failures
+    )
 
 
 def parse_span_rows_final(
@@ -268,11 +273,11 @@ def parse_span_rows_final(
     return _kernel_and_stitch(span_chunk_projection(span_rows, chunk_spans))
 
 
-def _kernel_and_stitch(proj: DataFrame) -> DataFrame:
+def _kernel_and_stitch(proj: DataFrame, failures=None) -> DataFrame:
     from . import vkernel
 
     out = proj.mapInArrow(
-        vkernel.parse_docs_final_arrow, schema=schema.QUESTION_FINAL
+        vkernel.final_kernel(failures), schema=schema.QUESTION_FINAL
     )
     out = out.withColumn(
         "_doc", F.substring_index("doc_id", SEP, 1)

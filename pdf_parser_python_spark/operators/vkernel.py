@@ -40,6 +40,7 @@ Reference semantics: /root/reference/parser/state_machine.py:133-366
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import numpy as np
@@ -1006,16 +1007,25 @@ def _emit_final(state) -> pa.RecordBatch:
     )
 
 
-def _fallback_final(doc_ids, fb_docs) -> pa.RecordBatch | None:
+def _fallback_final(doc_ids, fb_docs, failures=None) -> pa.RecordBatch | None:
+    """Row-exact Python parse of the dialect-fallback documents. A
+    document whose FSM raised yields only the parse_failed sentinel,
+    which is dropped here and counted into ``failures`` (anything with
+    ``add``: a Spark accumulator on executors)."""
     from . import dkernel
 
     rows: list[tuple] = []
+    n_failed = 0
     ids_py = doc_ids.to_pylist()
     for d, k, t, r, p in fb_docs:
         for raw in dkernel._parse_doc(ids_py[d], k, t, r, p):
             fin = dkernel._finalize_row(raw)
             if fin is not None:
                 rows.append(fin)
+            elif raw[13]:
+                n_failed += 1
+    if n_failed and failures is not None:
+        failures.add(n_failed)
     if not rows:
         return None
     cols = list(zip(*rows))
@@ -1330,12 +1340,25 @@ def question_scalars_arrow(
 
 
 def parse_docs_final_arrow(
-    batches: Iterator[pa.RecordBatch],
+    batches: Iterator[pa.RecordBatch], failures=None,
 ) -> Iterator[pa.RecordBatch]:
     """mapInArrow entrypoint: packed documents → finalized QUESTION_FINAL
-    entities (nested options/images/anomalies built arrow-side)."""
-    yield from _entry(batches, _emit_final, _fallback_final,
+    entities (nested options/images/anomalies built arrow-side).
+
+    ``failures`` (bound by :func:`final_kernel`): counter that gets one
+    ``add`` per document whose Python fallback FSM raised — such a
+    document emits no rows. Vectorized documents cannot fail that way."""
+    yield from _entry(batches, _emit_final,
+                      partial(_fallback_final, failures=failures),
                       QUESTION_FINAL_ARROW_SCHEMA)
+
+
+def final_kernel(failures=None):
+    """:func:`parse_docs_final_arrow` for ``mapInArrow``, with the
+    ``failures`` counter (e.g. a Spark accumulator) bound when given."""
+    if failures is None:
+        return parse_docs_final_arrow
+    return partial(parse_docs_final_arrow, failures=failures)
 
 
 def validate_docs_arrow(

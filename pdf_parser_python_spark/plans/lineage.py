@@ -20,6 +20,16 @@ Reference semantics being re-expressed (SURVEY.md §2.8):
   lineage row lands (write data → commit lineage), so a crash between
   the two re-runs the bucket harmlessly.
 
+An extraction bucket commits in two Spark jobs with one Python
+crossing: the batch vectorized kernel (``pipeline.extract_questions``)
+writes ``questions/bucket=b``, then the JVM flatten over that output
+writes ``flat_spans/bucket=b``. Counts ride the writes (Observation
+API, plus an accumulator for documents whose fallback FSM raised); the
+staged input and the outputs are read with declared schemas, and the
+giant-document dispatch is decided from staging metrics, so no commit
+runs a schema-inference or probe job. A ``raw_questions/`` directory
+left by older versions is ignored.
+
 Storage is a parquet directory layout with Iceberg-shaped semantics
 (no Iceberg runtime jar ships in this sandbox); the lineage contract
 is identical — swap `_write_bucket` for `overwritePartitions` on a
@@ -33,12 +43,20 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..operators import finalize as _finalize
+from .. import schema
 from ..operators import flatten as _flatten
 from . import pipeline
+
+
+def _with_bucket(struct: T.StructType) -> T.StructType:
+    """``struct`` plus the int ``bucket`` partition column."""
+    return T.StructType(
+        struct.fields + [T.StructField("bucket", T.IntegerType())]
+    )
 
 
 #: bucket commits in flight at once (r8, guide §2.6): the driver-side
@@ -78,7 +96,6 @@ class ExtractionJob:
         self.n_buckets = n_buckets
         self.questions_dir = os.path.join(out_dir, "questions")
         self.spans_dir = os.path.join(out_dir, "flat_spans")
-        self.raw_dir = os.path.join(out_dir, "raw_questions")
         self.lineage_path = os.path.join(out_dir, "lineage.jsonl")
         self._lineage_lock = __import__("threading").Lock()
 
@@ -141,9 +158,10 @@ class ExtractionJob:
         bucket so every per-bucket pass is partition-pruned instead of a
         full-corpus scan (the parquet stand-in for an Iceberg table
         partitioned on bucket(doc_id)). Per-bucket input metrics
-        (docs, spans) are computed HERE, in one aggregation over the
-        staged table, so bucket commits never re-scan the input for
-        bookkeeping. Idempotent via a _STAGED marker.
+        (docs, then :meth:`_input_metric_exprs`) are computed HERE, in
+        one aggregation over the staged table, so bucket commits never
+        re-scan the input for bookkeeping. Idempotent via a _STAGED
+        marker.
         """
         staged = os.path.join(self.out_dir, "input_bucketed")
         marker = os.path.join(staged, "_STAGED")
@@ -151,81 +169,110 @@ class ExtractionJob:
             self._bucketed(documents).write.mode("overwrite").partitionBy(
                 "bucket"
             ).parquet(staged)
+            exprs = self._input_metric_exprs()
             m = (
-                documents.sparkSession.read.parquet(staged)
+                self._staged_frame(documents, staged)
                 .groupBy("bucket")
                 .agg(
                     F.count("*").alias("d"),
-                    self._input_metric_expr().alias("s"),
+                    *(e.alias(f"m{i}") for i, e in enumerate(exprs)),
                 )
                 .collect()
             )
-            metrics = {int(r["bucket"]): [int(r["d"]), int(r["s"] or 0)]
-                       for r in m}
+            metrics = {
+                int(r["bucket"]): [int(r["d"])] + [
+                    int(r[f"m{i}"] or 0) for i in range(len(exprs))
+                ]
+                for r in m
+            }
             with open(os.path.join(staged, "_input_metrics.json"), "w") as fh:
                 json.dump(metrics, fh)
             with open(marker, "w") as fh:
                 fh.write("ok\n")
         return staged
 
-    def _input_metric_expr(self):
-        """Second per-bucket input metric (first is doc count) — the
-        extraction job tracks input spans; subclasses override."""
-        return F.sum(F.size("spans"))
+    @staticmethod
+    def _staged_frame(documents: DataFrame, staged: str) -> DataFrame:
+        """The staged table read with its known schema (the input's plus
+        ``bucket``) — no inference job; a bucket is one partition
+        filter on this frame, and the file listing is shared by all."""
+        return documents.sparkSession.read.schema(
+            _with_bucket(documents.schema)
+        ).parquet(staged)
 
-    def _input_metrics(self, staged: str, bucket: int) -> tuple[int, int]:
+    def _input_metric_exprs(self) -> list:
+        """Per-bucket input metrics after the doc count, passed to
+        :meth:`_write_bucket` in order — the extraction job tracks
+        input spans and the largest document's span count (its
+        giant-doc dispatch decision); subclasses override."""
+        size = F.size("spans")
+        return [F.sum(size), F.max(size)]
+
+    def _input_metrics(self, staged: str) -> dict[int, list[int]]:
         with open(os.path.join(staged, "_input_metrics.json")) as fh:
-            metrics = json.load(fh)
-        return tuple(metrics.get(str(bucket), [0, 0]))
+            return {int(b): m for b, m in json.load(fh).items()}
+
+    def _failure_counter(self, spark: SparkSession):
+        """A fresh accumulator for one commit's parse failures. PySpark
+        numbers accumulators from an unlocked class counter, and commits
+        run on LINEAGE_POOL threads."""
+        with self._lineage_lock:
+            return spark.sparkContext.accumulator(0)
 
     def _write_bucket(
-        self, bucket: int, docs: DataFrame, n_docs: int, n_spans_in: int
+        self, bucket: int, docs: DataFrame, n_docs: int, n_spans_in: int,
+        max_doc_spans: int | None = None,
     ) -> dict:
-        """One bucket commit — the parse executes exactly ONCE.
+        """One bucket commit: two Spark jobs, one Python crossing.
 
-        Round 1 ran the parse twice (questions write + failure count)
-        and scanned the input a third time for metrics; at scale that
-        doubled extraction cost per bucket. Now the raw kernel output
-        (incl. parse_failed sentinel rows) is materialized first, and
-        questions/flat-spans/failure counts all derive from written
-        parquet; input metrics come from staging time.
+        1. questions: ``pipeline.extract_questions`` — the batch
+           vectorized kernel, giant-document union included — written
+           to ``questions/bucket=b``; the row count is observed on the
+           write, and documents whose fallback FSM raised are counted
+           by an accumulator the kernel tasks update.
+        2. flat spans: that output read back with its declared schema
+           (no inference job) through the JVM ``flat_spans``, written
+           to ``flat_spans/bucket=b`` with an observed row count.
+
+        ``max_doc_spans`` (the bucket's largest document, recorded at
+        staging) decides the giant-document dispatch without a probe
+        job; staging written by older versions lacks it, and those
+        buckets fall back to ``"auto"``. Input metrics come from
+        staging time, so nothing re-scans the input.
         """
         t0 = time.perf_counter()
         spark = docs.sparkSession
         qdir = os.path.join(self.questions_dir, f"bucket={bucket}")
         sdir = os.path.join(self.spans_dir, f"bucket={bucket}")
-        rdir = os.path.join(self.raw_dir, f"bucket={bucket}")
         # delete-before-insert (reference background_worker.py:343-357)
-        for d in (qdir, sdir, rdir):
+        for d in (qdir, sdir):
             shutil.rmtree(d, ignore_errors=True)
 
+        # an argument, not job state: commits run on LINEAGE_POOL threads
+        if max_doc_spans is None:
+            giant = "auto"
+        elif max_doc_spans > pipeline.GIANT_DOC_SPANS:
+            giant = pipeline.GIANT_DOC_SPANS
+        else:
+            giant = None
+        failures = self._failure_counter(spark)
         # metric counts ride ON the write actions (Observation API) —
-        # r5: the three separate count() jobs were measured as a large
-        # share of the per-bucket fixed cost (BENCH.md lineage phase);
-        # at 4096 buckets that is 3×4096 driver round-trips for numbers
-        # the write jobs already see
-        from pyspark.sql import Observation
-
-        ob_raw = Observation()
-        pipeline.parse_raw(docs).observe(
-            ob_raw,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("parse_failed").cast("long")).alias("nf"),
-        ).write.mode("overwrite").parquet(rdir)
-        n_fail = int(ob_raw.get["nf"] or 0)
-        raw = spark.read.parquet(rdir)
-
+        # r5: separate count() jobs were measured as a large share of
+        # the per-bucket fixed cost (BENCH.md lineage phase)
         ob_q = Observation()
-        _finalize.finalize_questions(raw).observe(
-            ob_q, F.count(F.lit(1)).alias("n")
-        ).write.mode("overwrite").parquet(qdir)
+        pipeline.extract_questions(
+            docs, giant_doc_spans=giant, parse_failures=failures
+        ).observe(ob_q, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(qdir)
         n_q = int(ob_q.get["n"])
-        written = spark.read.parquet(qdir)
 
         ob_s = Observation()
-        _flatten.flat_spans(written).observe(
-            ob_s, F.count(F.lit(1)).alias("n")
-        ).write.mode("overwrite").parquet(sdir)
+        _flatten.flat_spans(
+            spark.read.schema(schema.QUESTION_FINAL).parquet(qdir)
+        ).observe(ob_s, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(sdir)
         n_spans_out = int(ob_s.get["n"])
         return {
             "partition_id": bucket,
@@ -233,7 +280,7 @@ class ExtractionJob:
             "docs_parsed": n_docs,
             "spans_emitted": int(n_spans_out),
             "questions_emitted": int(n_q),
-            "parse_failures": int(n_fail),
+            "parse_failures": int(failures.value),
             "wall_sec": round(time.perf_counter() - t0, 3),
             "input_spans": int(n_spans_in),
             "error": "",
@@ -269,9 +316,7 @@ class ExtractionJob:
         pending = self.pending_buckets()
         if max_buckets is not None:
             pending = pending[:max_buckets]
-        spark = documents.sparkSession
-        staged = self._stage_input(documents)
-        processed = self._commit_buckets(spark, staged, pending)
+        processed = self._commit_buckets(documents, pending)
         return {
             "processed": processed,
             "remaining": self.pending_buckets(),
@@ -279,23 +324,25 @@ class ExtractionJob:
         }
 
     def _commit_buckets(
-        self, spark: SparkSession, staged: str, pending: list[int]
+        self, documents: DataFrame, pending: list[int]
     ) -> list[int]:
-        """Commit each pending bucket, up to LINEAGE_POOL at a time
-        (guide §2.6: concurrent driver threads let the next bucket's
-        tasks back-fill executors idled by the current bucket's tail).
-        Commit protocol per bucket is unchanged — data first, lineage
-        row after — and a failure never blocks the other buckets."""
+        """Stage ``documents`` (once), then commit each pending bucket,
+        up to LINEAGE_POOL at a time (guide §2.6: concurrent driver
+        threads let the next bucket's tasks back-fill executors idled
+        by the current bucket's tail). Commit protocol per bucket is
+        unchanged — data first, lineage row after — and a failure never
+        blocks the other buckets."""
+        staged = self._stage_input(documents)
+        table = self._staged_frame(documents, staged)
+        metrics = self._input_metrics(staged)
 
         def commit(b: int) -> int | None:
-            bdir = os.path.join(staged, f"bucket={b}")
-            if not os.path.exists(bdir):  # hash range empty at this size
+            if b not in metrics:  # hash range empty at this size
                 self._append_lineage(self._empty_row(b))
                 return b
-            docs_b = spark.read.parquet(bdir)
-            metrics = self._input_metrics(staged, b)
+            docs_b = table.where(F.col("bucket") == b)
             try:
-                row = self._write_bucket(b, docs_b, *metrics)
+                row = self._write_bucket(b, docs_b, *metrics[b])
             except Exception as exc:  # never lose prior commits
                 self._append_lineage(self._failed_row(b, exc))
                 return None
@@ -306,19 +353,27 @@ class ExtractionJob:
 
     # ── results ──────────────────────────────────────────────────────
 
-    def _read_done(self, spark: SparkSession, base: str) -> DataFrame:
+    def _read_done(
+        self, spark: SparkSession, base: str, struct: T.StructType | None = None
+    ) -> DataFrame:
+        """Committed buckets under ``base``; with ``struct`` (the data
+        columns) read with that schema plus ``bucket`` — no inference."""
         paths = [
             p
             for b in sorted(self.done_buckets())
             if os.path.exists(p := os.path.join(base, f"bucket={b}"))
         ]
-        return spark.read.option("basePath", base).parquet(*paths)
+        reader = spark.read.option("basePath", base)
+        if struct is not None:
+            reader = reader.schema(_with_bucket(struct))
+        return reader.parquet(*paths)
 
     def questions(self, spark: SparkSession) -> DataFrame:
-        return self._read_done(spark, self.questions_dir)
+        return self._read_done(spark, self.questions_dir,
+                               schema.QUESTION_FINAL)
 
     def flat_spans(self, spark: SparkSession) -> DataFrame:
-        return self._read_done(spark, self.spans_dir)
+        return self._read_done(spark, self.spans_dir, schema.FLAT_SPAN_SEQ)
 
 
 class CurationJob(ExtractionJob):
@@ -348,12 +403,12 @@ class CurationJob(ExtractionJob):
         self.line_width = line_width
         self.gate_kw = gate_kw
 
-    def _input_metric_expr(self):
+    def _input_metric_exprs(self) -> list:
         from ..operators.textstats import token_count
 
-        return F.sum(
+        return [F.sum(
             token_count(F.coalesce(F.col("text"), F.lit(""))).cast("long")
-        )
+        )]
 
     def _empty_row(self, bucket: int) -> dict:
         return {
@@ -488,12 +543,12 @@ class DedupJob(ExtractionJob):
             "error": error,
         }
 
-    def _input_metric_expr(self):
+    def _input_metric_exprs(self) -> list:
         from ..operators.textstats import token_count
 
-        return F.sum(
+        return [F.sum(
             token_count(F.coalesce(F.col("text"), F.lit(""))).cast("long")
-        )
+        )]
 
     # ── phase 1: per-bucket signatures ───────────────────────────────
 
@@ -635,8 +690,7 @@ class DedupJob(ExtractionJob):
         pending = self.pending_buckets()
         if max_buckets is not None:
             pending = pending[:max_buckets]
-        staged = self._stage_input(documents)
-        processed = self._commit_buckets(spark, staged, pending)
+        processed = self._commit_buckets(documents, pending)
         bands_done = []
         if not self.pending_buckets():
             pb = self.pending_bands()

@@ -203,7 +203,7 @@ def _resolve_threshold(documents: DataFrame, kw: dict) -> int | None:
     return GIANT_DOC_SPANS if has_giant else None
 
 
-def _parse_giant_final(big: DataFrame) -> DataFrame:
+def _parse_giant_final(big: DataFrame, failures=None) -> DataFrame:
     """Giant-doc branch: anchor-aligned chunking + the SAME vectorized
     kernel as the main path (operators/chunked.py — r4 rework: the
     previous chunked-native-FSM branch was measured ~15× slower than a
@@ -212,7 +212,7 @@ def _parse_giant_final(big: DataFrame) -> DataFrame:
     ~n_spans/GIANT_CHUNK kernel rows."""
     from ..operators.chunked import parse_giant_final
 
-    return parse_giant_final(big, chunk_spans=GIANT_CHUNK)
+    return parse_giant_final(big, chunk_spans=GIANT_CHUNK, failures=failures)
 
 
 def tokenize(documents: DataFrame) -> DataFrame:
@@ -287,6 +287,9 @@ def parse_raw(
     engine="grouped": groupBy(doc_id).applyInPandas — one invocation
     per document; kept as the semantically-obvious reference
     implementation (tests assert all engines agree).
+
+    No lineage path uses engine="packed" any more: ExtractionJob
+    commits through extract_questions' vectorized kernel.
     """
     if engine == "packed":
         proj = dkernel.packed_projection(documents)
@@ -325,7 +328,12 @@ def extract_questions(documents: DataFrame, **kw) -> DataFrame:
     other engines keep parse → native finalize, and tests assert row
     equality between all of them. Documents above ``giant_doc_spans``
     (default auto-probe; None disables) auto-route to the chunked
-    native engine — no single-task straggler on skewed corpora."""
+    native engine — no single-task straggler on skewed corpora.
+
+    ``parse_failures`` (packed engine): a counter with ``add``, e.g. a
+    Spark accumulator, that receives one per document whose row-exact
+    Python fallback FSM raised; such documents emit no rows. It rides
+    the kernel tasks of whatever action runs the plan — no extra job."""
     engine = kw.get("engine", "packed")
     if engine in ("packed", "packed-pandas") and not kw.get(
         "shuffle_partitions"
@@ -337,11 +345,12 @@ def extract_questions(documents: DataFrame, **kw) -> DataFrame:
             else _giant_split(documents, threshold)
         )
         proj = dkernel.packed_projection(small)
+        failures = kw.get("parse_failures")
         if engine == "packed":
             from ..operators import vkernel
 
             out = proj.mapInArrow(
-                vkernel.parse_docs_final_arrow,
+                vkernel.final_kernel(failures),
                 schema=schema.QUESTION_FINAL,
             )
         else:
@@ -349,7 +358,7 @@ def extract_questions(documents: DataFrame, **kw) -> DataFrame:
                 dkernel.parse_docs_final, schema=schema.QUESTION_FINAL
             )
         if big is not None:
-            out = out.unionByName(_parse_giant_final(big))
+            out = out.unionByName(_parse_giant_final(big, failures))
         return out
     return _finalize.finalize_questions(parse_raw(documents, **kw))
 
