@@ -8,9 +8,9 @@ re-expressed Spark-first:
   ``documents(doc_id string, spans array<struct<kind,text,media_ref,offset>>)``
   (the Iceberg-style layout of BASELINE.json's ``input_hint``);
 - a vectorized line tokenizer + anchor classifier (native Column ops and
-  Arrow-batched pandas, never per-row Python);
-- a batched state-machine segmenter (grouped-map pandas kernel, plus a
-  fully-native window/array implementation used as the scale path);
+  Arrow/RE2 batches, never per-row Python);
+- a state-machine segmenter in two engines: a vectorized Arrow kernel
+  (the default) and a fully-native window/array implementation;
 - native finalization, canonical span flattening, and validation layers;
 - checkpoint/resume with per-partition lineage + extraction metrics;
 - training-data-pipeline operators: dedup (exact/minhash/simhash),

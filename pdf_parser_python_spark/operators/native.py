@@ -22,9 +22,10 @@ relationally because state only ever *advances* within a question:
 This is the "prove the built-ins could do it" engine: one shuffle
 (hash by doc_id for the windows + the final groupBy reuses the same
 partitioning), whole-stage codegen for classification, interpreted
-HOFs only at assembly. The Arrow kernels (dkernel/pkernel) remain the
-default because a linear scan in compiled-regex Python beats four
-window passes — but the semantics are identical and tests assert it.
+HOFs only at assembly. The vectorized Arrow kernel (vkernel) remains the
+default because RE2 passes and numpy cumsums over whole Arrow batches
+beat four window passes — but the semantics are identical and tests
+assert it.
 """
 
 from __future__ import annotations

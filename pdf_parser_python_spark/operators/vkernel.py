@@ -1,8 +1,8 @@
 """Vectorized packed kernel — Arrow/RE2/numpy, no per-line Python.
 
-Profiling the fused pandas kernel (BENCH.md) puts ~80% of stage time
-in (a) materializing every span string as a Python object and (b) the
-per-line Python FSM loop, while one RE2 pass over ALL span texts costs
+Profiling the former fused pandas kernel (BENCH.md) put ~80% of stage
+time in (a) materializing every span string as a Python object and (b)
+the per-line Python FSM loop, while one RE2 pass over ALL span texts costs
 ~0.05 s per 350k spans. This kernel keeps strings inside Arrow end to
 end:
 
@@ -13,7 +13,8 @@ end:
    constants as every other engine (functions/anchors.py), with
    Python-``re`` alternation priority resolved by boolean masks (every
    alternative anchors at the first non-ws char, so independent masks
-   + priority == the combined alternation the pandas kernels use);
+   + priority == the combined alternation of the Python twin,
+   dkernel._COMBINED_NOISE);
 3. run the FSM as numpy segmented cumsums — the same closed-form
    decomposition :mod:`.native` proves in Catalyst (state only ever
    advances within a question);
@@ -95,7 +96,7 @@ _R_NOISE = f"(?:(?i:{_re2(A.NOISE_CI, False)})|{_re2(A.NOISE_CS, False)})"
 _R_COVER = _re2(A.COVER_NOISE, False)
 
 #: NOTE (measured dead end, do not revisit): folding the whole grammar
-#: into ONE ordered-alternation extract_regex pass (pkernel._COMBINED
+#: into ONE ordered-alternation extract_regex pass (dkernel._COMBINED_NOISE
 #: style) is ~2× SLOWER than the independent match passes above —
 #: capture groups in a large alternation push RE2 off its DFA fast
 #: path into per-line submatch NFA. Independent group-free
@@ -1070,8 +1071,8 @@ def _emit_validation(state) -> pa.RecordBatch:
     list fields via ListArray offsets over doc-sorted values; python
     touches only the rare gap-list docs and the Decimal success-rate
     rounding (exact HALF_UP, dkernel._round_half_up2). Row-equality
-    with operators/validate.validation_report and the pandas
-    validate_docs kernel is asserted by tests + differential fuzz."""
+    with operators/validate.validation_report and the Python twin
+    dkernel._validate_doc is asserted by tests + differential fuzz."""
     from .dkernel import _round_half_up2
 
     sg = state["sg"]

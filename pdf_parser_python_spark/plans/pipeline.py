@@ -1,25 +1,34 @@
-"""End-to-end extraction plan.
+"""End-to-end extraction plans: two engines, one FSM semantics.
 
-    documents(doc_id, spans[]) ──explode──▶ line tokens (native)
-        ──noise prefilter (native, pushed below the UDF barrier)──▶
-        groupBy(doc_id).applyInPandas(segment_kernel) ──▶ raw questions
-        ──finalize (native HOFs)──▶ questions
-        ──flatten (native)──▶ canonical output spans
+``engine="packed"`` (default) is the vectorized Arrow kernel:
 
-Stage placement mirrors the reference's hand-fusion (SURVEY.md §4): the
-always-ignore noise filter (state_machine.py:200-202) and empty-line
-drop (:95,182,196-198) run as Column predicates *before* the grouped
-kernel, so Catalyst prunes columns and the Arrow transfer ships only
-surviving lines. Cover-page noise is state-dependent and stays in the
-kernel.
+    documents(doc_id, spans[]) ──packed_projection (native: spans
+        sorted by offset, primitive arrays)──▶ mapInArrow(vkernel)
+        ──▶ questions | flat spans | validation report
+
+One scan, one Python crossing, zero Exchange. Line split, strip, the
+noise filter, the FSM, finalize and flatten all run inside the kernel
+(operators/vkernel.py). A document holding a character that RE2 and
+Python ``re`` read differently falls back, inside the same task, to the
+row-exact Python FSM (operators/dkernel.py). Documents above
+``giant_doc_spans`` take the anchor-chunked branch (operators/
+chunked.py), which runs the same kernel and is unioned in.
+
+``engine="native"`` is pure Catalyst, no Python:
+
+    documents ──tokenize (explode, split, strip, noise filter)──▶
+        parse_native (window FSM, operators/native.py) ──▶ raw questions
+        ──finalize (HOFs)──▶ questions ──flatten──▶ flat spans
+
+``parse_raw`` is the native raw stage and the only producer of
+QUESTION_RAW. Tests assert the two engines agree row for row.
 
 Scale notes (100 TB / 10^12 docs):
-- the only shuffle is the hash partition by ``doc_id`` feeding the
-  grouped kernel; it is also the skew point — see ``repartition_hint``
-  and operators/native.py's segment-level alternative;
-- tokenization is explode + split: narrow, no shuffle, whole-stage
-  codegen;
-- finalize/flatten are per-row expressions: no shuffle after the kernel.
+- packed is map-only; a pathological document is one task unless the
+  giant dispatch reroutes it (``GIANT_DOC_SPANS``);
+- native hashes by ``doc_id`` once for its windows; ``chunk_size``
+  spreads one document's segmentation over many tasks;
+- finalize/flatten are per-row expressions: no shuffle after the FSM.
 """
 
 from __future__ import annotations
@@ -32,11 +41,9 @@ from ..functions import anchors as A
 from ..operators import finalize as _finalize
 from ..operators import flatten as _flatten
 from ..operators import dkernel
-from ..operators.kernel import segment_kernel
-from ..operators.pkernel import parse_partition
 
-#: Giant-document dispatch threshold (spans per doc). The packed engines
-#: carry one document per Arrow row, so a pathological doc is one task.
+#: Giant-document dispatch threshold (spans per doc). The packed engine
+#: carries one document per Arrow row, so a pathological doc is one task.
 #: Round-4 measurement (BENCH.md): decoding a packed giant row is
 #: inherently ONE scan task (~7.5s at 2M spans — more than the whole
 #: fused single-task parse at 9.3s), so rerouting merely-large docs
@@ -162,7 +169,7 @@ def _footer_max_doc_spans(documents: DataFrame) -> int | None:
 
 
 def _resolve_threshold(documents: DataFrame, kw: dict) -> int | None:
-    """Giant-doc dispatch policy for the packed engines.
+    """Giant-doc dispatch policy for the packed engine.
 
     ``giant_doc_spans`` kw: ``"auto"`` (default) bounds the corpus's
     max doc size — `any doc > GIANT_DOC_SPANS spans?` — and only
@@ -268,184 +275,117 @@ def tokenize(documents: DataFrame) -> DataFrame:
 
 
 def parse_raw(
-    documents: DataFrame,
-    shuffle_partitions: int | None = None,
-    engine: str = "packed",
-    chunk_size: int | None = None,
+    documents: DataFrame, chunk_size: int | None = None
 ) -> DataFrame:
-    """documents → raw question rows (pre-finalize).
+    """documents → raw question rows (QUESTION_RAW, pre-finalize) on the
+    native engine: ``tokenize`` then the window FSM
+    (operators/native.py). ``chunk_size`` enables intra-document
+    parallel segmentation for giant documents.
 
-    engine="packed" (default): zero-shuffle — the input is already one
-    row per document, so parse straight off the packed span arrays
-    (operators/dkernel.py). Scan → mapInPandas, single stage.
+    The packed engine never materializes raw rows: its kernel parses
+    and finalizes in one pass."""
+    from ..operators.native import parse_native
 
-    engine="partition": line-grained scale path — explode + repartition
-    by doc_id + sortWithinPartitions + mapInPandas over whole Arrow
-    batches, FSM state carried across batches. Use for line-grained
-    sources or documents too large for a single Arrow row.
+    return parse_native(tokenize(documents), chunk_size=chunk_size)
 
-    engine="grouped": groupBy(doc_id).applyInPandas — one invocation
-    per document; kept as the semantically-obvious reference
-    implementation (tests assert all engines agree).
 
-    No lineage path uses engine="packed" any more: ExtractionJob
-    commits through extract_questions' vectorized kernel.
-    """
-    if engine == "packed":
-        proj = dkernel.packed_projection(documents)
-        return proj.mapInPandas(dkernel.parse_docs, schema=schema.QUESTION_RAW)
-    if engine == "native":
-        from ..operators.native import parse_native
-
-        # chunk_size: intra-doc parallel segmentation for giant docs
-        return parse_native(tokenize(documents), chunk_size=chunk_size)
-    lines = tokenize(documents)
-    if engine == "grouped":
-        grouped = (
-            lines.repartition(shuffle_partitions, "doc_id")
-            if shuffle_partitions
-            else lines
+def _engine(kw: dict) -> str:
+    engine = kw.get("engine", "packed")
+    if engine not in ("packed", "native"):
+        raise ValueError(
+            f"unknown engine {engine!r}: expected 'packed' or 'native'"
         )
-        return grouped.groupBy("doc_id").applyInPandas(
-            segment_kernel, schema=schema.QUESTION_RAW
-        )
-    parts = (
-        lines.repartition(shuffle_partitions, "doc_id")
-        if shuffle_partitions
-        else lines.repartition("doc_id")
+    return engine
+
+
+def _packed_split(documents: DataFrame, kw: dict):
+    """(packed projection of the small docs, giant docs or None)."""
+    threshold = _resolve_threshold(documents, kw)
+    small, big = (
+        (documents, None)
+        if threshold is None
+        else _giant_split(documents, threshold)
     )
-    return parts.sortWithinPartitions("doc_id", "offset", "line_no").mapInPandas(
-        parse_partition, schema=schema.QUESTION_RAW
-    )
+    return dkernel.packed_projection(small), big
 
 
 def extract_questions(documents: DataFrame, **kw) -> DataFrame:
     """documents → finalized question table (the flagship operator).
 
-    Packed default = the vectorized Arrow kernel (parse + finalize in
-    one pass, nested entities assembled arrow-side — operators/
-    vkernel.py); engine="packed-pandas" keeps the fused pandas kernel;
-    other engines keep parse → native finalize, and tests assert row
-    equality between all of them. Documents above ``giant_doc_spans``
-    (default auto-probe; None disables) auto-route to the chunked
-    native engine — no single-task straggler on skewed corpora.
+    ``engine="packed"`` (default): the vectorized Arrow kernel parses
+    and finalizes in one pass, nested entities assembled arrow-side
+    (operators/vkernel.py). Documents above ``giant_doc_spans``
+    (default ``"auto"``; None disables) are routed to the chunked
+    branch — no single-task straggler on skewed corpora.
+    ``engine="native"``: ``parse_raw`` (``chunk_size`` honoured) then
+    the Column-API finalize. Tests assert the two are row-equal.
 
     ``parse_failures`` (packed engine): a counter with ``add``, e.g. a
     Spark accumulator, that receives one per document whose row-exact
     Python fallback FSM raised; such documents emit no rows. It rides
     the kernel tasks of whatever action runs the plan — no extra job."""
-    engine = kw.get("engine", "packed")
-    if engine in ("packed", "packed-pandas") and not kw.get(
-        "shuffle_partitions"
-    ):
-        threshold = _resolve_threshold(documents, kw)
-        small, big = (
-            (documents, None)
-            if threshold is None
-            else _giant_split(documents, threshold)
+    if _engine(kw) == "native":
+        return _finalize.finalize_questions(
+            parse_raw(documents, chunk_size=kw.get("chunk_size"))
         )
-        proj = dkernel.packed_projection(small)
-        failures = kw.get("parse_failures")
-        if engine == "packed":
-            from ..operators import vkernel
+    from ..operators import vkernel
 
-            out = proj.mapInArrow(
-                vkernel.final_kernel(failures),
-                schema=schema.QUESTION_FINAL,
-            )
-        else:
-            out = proj.mapInPandas(
-                dkernel.parse_docs_final, schema=schema.QUESTION_FINAL
-            )
-        if big is not None:
-            out = out.unionByName(_parse_giant_final(big, failures))
-        return out
-    return _finalize.finalize_questions(parse_raw(documents, **kw))
+    proj, big = _packed_split(documents, kw)
+    failures = kw.get("parse_failures")
+    out = proj.mapInArrow(
+        vkernel.final_kernel(failures), schema=schema.QUESTION_FINAL
+    )
+    if big is not None:
+        out = out.unionByName(_parse_giant_final(big, failures))
+    return out
 
 
 def extract_validation(documents: DataFrame, **kw) -> DataFrame:
     """documents → per-doc ValidationReport (reference validator.py).
 
     The default packed engine computes the report INSIDE the parse
-    kernel (dkernel.validate_docs): one scan → mapInPandas pass, zero
-    shuffle, and no question text ever crosses the Arrow boundary —
-    where extract_questions → validation_report pays the full FSM parse
-    and then aggregates it away (r2 bench: 6.99 s vs 5.69 s for the
-    parse alone at sf0.1). Other engines keep the relational
+    kernel (vkernel.validate_docs_arrow): one scan → mapInArrow pass,
+    zero shuffle, and no question text ever crosses the Arrow boundary
+    — where extract_questions → validation_report pays the full FSM
+    parse and then aggregates it away (r2 bench: 6.99 s vs 5.69 s for
+    the parse alone at sf0.1). The native engine keeps the relational
     decomposition (operators/validate.py), row-equal by test."""
-    engine = kw.get("engine", "packed")
-    if engine in ("packed", "packed-pandas") and not kw.get(
-        "shuffle_partitions"
-    ):
-        from ..operators import dkernel as _dk
-        from ..operators.validate import validation_report as _vrep
-
-        threshold = _resolve_threshold(documents, kw)
-        small, big = (
-            (documents, None)
-            if threshold is None
-            else _giant_split(documents, threshold)
-        )
-        proj = dkernel.packed_projection(small)
-        if engine == "packed":
-            from ..operators import vkernel
-
-            out = proj.mapInArrow(
-                vkernel.validate_docs_arrow,
-                schema=schema.VALIDATION_REPORT,
-            )
-        else:
-            out = proj.mapInPandas(
-                _dk.validate_docs, schema=schema.VALIDATION_REPORT
-            )
-        if big is not None:
-            out = out.unionByName(_vrep(_parse_giant_final(big)))
-        return out
     from ..operators.validate import validation_report
 
-    return validation_report(extract_questions(documents, **kw))
+    if _engine(kw) == "native":
+        return validation_report(extract_questions(documents, **kw))
+    from ..operators import vkernel
+
+    proj, big = _packed_split(documents, kw)
+    out = proj.mapInArrow(
+        vkernel.validate_docs_arrow, schema=schema.VALIDATION_REPORT
+    )
+    if big is not None:
+        out = out.unionByName(validation_report(_parse_giant_final(big)))
+    return out
 
 
 def extract_flat_spans(documents: DataFrame, **kw) -> DataFrame:
     """documents → canonical ordered output spans (§1.4 contract).
 
-    The default packed engine uses the FUSED kernel
-    (dkernel.parse_docs_flat): scan → one mapInPandas emitting flat
-    primitive columns. The Column-API finalize+flatten stage it
-    replaces is interpreted HOF expressions costing ~3× the FSM itself;
-    the fused path is row-equal by test. Other engines keep
-    parse → finalize → flatten (the reference decomposition).
+    The default packed engine emits flat primitive columns straight
+    from the vectorized kernel (vkernel.parse_docs_flat_arrow): RE2
+    classify + numpy segmented cumsums + arrow-side joins, strings never
+    become Python objects, and the interpreted HOF finalize+flatten
+    stage never runs. The native engine keeps parse → finalize →
+    flatten (the reference decomposition), row-equal by test.
     """
-    engine = kw.get("engine", "packed")
-    if engine in ("packed", "packed-pandas") and not kw.get(
-        "shuffle_partitions"
-    ):
-        threshold = _resolve_threshold(documents, kw)
-        small, big = (
-            (documents, None)
-            if threshold is None
-            else _giant_split(documents, threshold)
-        )
-        proj = dkernel.packed_projection(small)
-        if engine == "packed":
-            # vectorized kernel (operators/vkernel.py): RE2 classify +
-            # numpy segmented cumsums + arrow-side joins — strings never
-            # become Python objects (~2.7x the pandas fused kernel)
-            from ..operators import vkernel
+    if _engine(kw) == "native":
+        return _flatten.flat_spans(extract_questions(documents, **kw))
+    from ..operators import vkernel
 
-            out = proj.mapInArrow(
-                vkernel.parse_docs_flat_arrow, schema=schema.FLAT_SPAN_SEQ
-            )
-        else:
-            out = proj.mapInPandas(
-                dkernel.parse_docs_flat, schema=schema.FLAT_SPAN_SEQ
-            )
-        if big is not None:
-            out = out.unionByName(
-                _flatten.flat_spans(_parse_giant_final(big))
-            )
-        return out
-    return _flatten.flat_spans(extract_questions(documents, **kw))
+    proj, big = _packed_split(documents, kw)
+    out = proj.mapInArrow(
+        vkernel.parse_docs_flat_arrow, schema=schema.FLAT_SPAN_SEQ
+    )
+    if big is not None:
+        out = out.unionByName(_flatten.flat_spans(_parse_giant_final(big)))
+    return out
 
 
 def extract_doc_text(
@@ -465,15 +405,7 @@ def extract_doc_text(
     extra shuffle over a handful of outlier docs)."""
     from ..operators import vkernel
 
-    threshold = _resolve_threshold(
-        documents, {"giant_doc_spans": giant_doc_spans}
-    )
-    small, big = (
-        (documents, None)
-        if threshold is None
-        else _giant_split(documents, threshold)
-    )
-    proj = dkernel.packed_projection(small)
+    proj, big = _packed_split(documents, {"giant_doc_spans": giant_doc_spans})
     out = proj.mapInArrow(vkernel.doc_text_arrow, schema=schema.DOC_TEXT)
     if big is not None:
         flat = _flatten.flat_spans(_parse_giant_final(big)).where(
@@ -508,15 +440,7 @@ def extract_question_scalars(
     For the full QUESTION_FINAL entity table use extract_questions."""
     from ..operators import vkernel
 
-    threshold = _resolve_threshold(
-        documents, {"giant_doc_spans": giant_doc_spans}
-    )
-    small, big = (
-        (documents, None)
-        if threshold is None
-        else _giant_split(documents, threshold)
-    )
-    proj = dkernel.packed_projection(small)
+    proj, big = _packed_split(documents, {"giant_doc_spans": giant_doc_spans})
     out = proj.mapInArrow(
         vkernel.question_scalars_arrow, schema=schema.QUESTION_SCALARS
     )

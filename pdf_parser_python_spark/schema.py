@@ -145,7 +145,8 @@ FLAT_SPAN = T.StructType(
 )
 
 #: flat_spans() output row (FLAT_SPAN + within-doc question seq) — also
-#: the schema of the fused packed→flat kernel (operators/dkernel.py).
+#: the schema of the vectorized kernel's parse_docs_flat_arrow
+#: (operators/vkernel.py).
 FLAT_SPAN_SEQ = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
@@ -188,9 +189,9 @@ QUESTION_SCALARS = T.StructType(
 )
 
 #: Per-document ValidationReport (reference validator.py:39-158) — the
-#: output of operators/validate.validation_report AND of the fused
-#: packed kernel's validate_docs (dkernel), which computes it in the
-#: same pass as the parse so validation never re-runs the FSM.
+#: output of operators/validate.validation_report AND of the vectorized
+#: kernel's validate_docs_arrow (operators/vkernel.py), which computes
+#: it in the same pass as the parse so validation never re-runs the FSM.
 VALIDATION_REPORT = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),

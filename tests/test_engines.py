@@ -1,93 +1,127 @@
-"""All three segmentation engines must agree span-for-span."""
+"""The packed (vectorized) and native engines must agree span-for-span,
+and the vectorized kernel must equal its row-exact Python twin."""
+
+import pytest
 
 from pdf_parser_python_spark import schema
-from pdf_parser_python_spark.operators import finalize
-from pdf_parser_python_spark.operators.flatten import flat_spans
 from pdf_parser_python_spark.plans import pipeline
 from pdf_parser_python_spark.sources.spans import generate_doc_spans
 
 
-def _flat(spark, docs, engine):
-    raw = pipeline.parse_raw(docs, engine=engine)
-    rows = flat_spans(finalize.finalize_questions(raw)).collect()
-    return sorted(
-        (r.doc_id, r.seq, r.order, r.question_number, r.section, r.kind,
-         r.text, r.media_ref)
-        for r in rows
+def _entity(r) -> tuple:
+    """Every QUESTION_FINAL field of one row (a Spark Row or a dict by
+    column name), nested fields as tuples."""
+    return (
+        r["doc_id"], r["seq"], r["question_number"], r["question_type"],
+        r["question_text"],
+        tuple(r["question_images"]),
+        tuple(
+            (o["key"], o["text"], o["is_correct"], tuple(o["images"]))
+            for o in r["options"]
+        ),
+        r["answer_text"], tuple(r["answer_images"]),
+        r["explanation_text"], tuple(r["explanation_images"]),
+        r["page_start"], r["page_end"],
+        tuple(
+            (a["type"], a["severity"], a["message"],
+             tuple(sorted(dict(a["context"] or {}).items())))
+            for a in r["anomalies"]
+        ),
+        r["anomaly_score"], r["has_question_text"], r["has_answer"],
+        r["has_explanation"], r["image_count"],
     )
 
 
 def test_engines_agree(spark):
+    import pyarrow as pa
+
+    from pdf_parser_python_spark.operators import dkernel, vkernel
+
     corpus = [
         (f"eng-{i:03d}", generate_doc_spans(5000 + i, mean_questions=9))
         for i in range(15)
     ]
+    # İ folds to ASCII i only in Python re: the vectorized kernel must
+    # route this document to its row-exact Python fallback
+    corpus.append(
+        (
+            "eng-fb",
+            [
+                ("text", "Question: 1\nWhere is İstanbul?", "", 0, 1),
+                ("text", "A. Turkey\nB. Greece", "", 1, 1),
+                ("image", "", "img/fb.png", 2, 2),
+                ("text", "Answer: A\nExplanation: by the Bosphorus", "", 3, 2),
+            ],
+        )
+    )
     docs = spark.createDataFrame(corpus, schema=schema.DOCUMENT_SPANS_EXT)
-    packed = _flat(spark, docs, "packed")
-    partition = _flat(spark, docs, "partition")
-    grouped = _flat(spark, docs, "grouped")
-    native = _flat(spark, docs, "native")
-    assert packed == partition == grouped == native
+    packed = sorted(map(tuple, pipeline.extract_flat_spans(docs).collect()))
+    native = sorted(
+        map(tuple, pipeline.extract_flat_spans(docs, engine="native").collect())
+    )
+    assert packed == native
     assert len(packed) > 200
+    assert any(r[0] == "eng-fb" for r in packed)
 
-    # the vectorized arrow kernel (default extract_flat_spans path) and
-    # the fused pandas kernel must emit identical flat spans
-    vec = sorted(
-        (r.doc_id, r.seq, r.order, r.question_number, r.section, r.kind,
-         r.text, r.media_ref)
-        for r in pipeline.extract_flat_spans(docs).collect()
-    )
-    pand = sorted(
-        (r.doc_id, r.seq, r.order, r.question_number, r.section, r.kind,
-         r.text, r.media_ref)
-        for r in pipeline.extract_flat_spans(
-            docs, engine="packed-pandas").collect()
-    )
-    assert vec == pand
-
-    # question scalars (vectorized) vs the full finalize pipeline
+    # question scalars (vectorized) vs the native finalize pipeline
     scal = sorted(
         tuple(r)
         for r in pipeline.extract_question_scalars(docs).collect()
     )
     full = sorted(
         tuple(r)
-        for r in pipeline.extract_questions(docs, engine="grouped").select(
+        for r in pipeline.extract_questions(docs, engine="native").select(
             "doc_id", "seq", "question_number", "question_type",
             "question_text", "answer_text", "anomaly_score",
         ).collect()
     )
     assert scal == full
 
-    # full-entity emitters: vectorized arrow vs fused pandas, every
-    # nested field (options incl J5 marking, images, anomalies, pages)
-    def entities(engine):
-        rows = pipeline.extract_questions(docs, engine=engine).collect()
-        return sorted(
-            (
-                r.doc_id, r.seq, r.question_number, r.question_type,
-                r.question_text,
-                tuple(r.question_images),
-                tuple(
-                    (o["key"], o["text"], o["is_correct"],
-                     tuple(o["images"]))
-                    for o in r.options
-                ),
-                r.answer_text, tuple(r.answer_images),
-                r.explanation_text, tuple(r.explanation_images),
-                r.page_start, r.page_end,
-                tuple(
-                    (a["type"], a["severity"], a["message"],
-                     tuple(sorted((a["context"] or {}).items())))
-                    for a in r.anomalies
-                ),
-                r.anomaly_score, r.has_question_text, r.has_answer,
-                r.has_explanation, r.image_count,
-            )
-            for r in rows
-        )
+    # driver-side: the vectorized kernel on the packed Arrow batches the
+    # executors see vs the Python twin run per document — flat spans
+    # and every nested field of the finalized entities
+    batches = dkernel.packed_projection(docs).toArrow().to_batches()
+    fallback = [
+        b.column("doc_id")[d].as_py()
+        for b in batches
+        for d, *_ in vkernel._explode_batch(b)[2]
+    ]
+    assert fallback == ["eng-fb"]
 
-    assert entities("packed") == entities("packed-pandas")
+    twin_flat, twin_final = [], []
+    for d in (r for b in batches for r in b.to_pylist()):
+        pages = (
+            [1] * len(d["kinds"])
+            if d["pages"] is None
+            else [1 if p is None else p for p in d["pages"]]
+        )
+        raw = dkernel._parse_doc(
+            d["doc_id"], d["kinds"], d["texts"], d["refs"], pages
+        )
+        twin_flat += dkernel._flatten_rows(raw)
+        twin_final += [
+            dict(zip(schema.QUESTION_FINAL.names, f))
+            for r in raw
+            if (f := dkernel._finalize_row(r)) is not None
+        ]
+
+    def run(kernel):
+        return pa.Table.from_batches(list(kernel(iter(batches)))).to_pylist()
+
+    vec_flat = sorted(tuple(r.values()) for r in run(vkernel.parse_docs_flat_arrow))
+    assert vec_flat == sorted(twin_flat) == packed
+    vec_final = sorted(map(_entity, run(vkernel.parse_docs_final_arrow)))
+    assert vec_final == sorted(map(_entity, twin_final))
+    assert any(e[0] == "eng-fb" and e[7] == "A" for e in vec_final)
+
+
+@pytest.mark.parametrize(
+    "entry", ["extract_questions", "extract_validation", "extract_flat_spans"]
+)
+def test_unknown_engine_rejected(spark, entry):
+    docs = spark.createDataFrame([("d", [])], schema=schema.DOCUMENT_SPANS_EXT)
+    with pytest.raises(ValueError, match="'packed' or 'native'"):
+        getattr(pipeline, entry)(docs, engine="bogus")
 
 
 def test_py_ws_chars_equals_python_whitespace_everywhere():
@@ -158,6 +192,7 @@ def test_zero_padded_and_overflow_qnum_clamp(spark):
     state_machine.py:217), not a >18-char digit string; only values
     beyond int64 clamp to QNUM_CAP, identically in every engine."""
     from pdf_parser_python_spark.functions import anchors as A
+    from pdf_parser_python_spark.operators import dkernel
 
     spans = []
     for off, line in enumerate([
@@ -173,12 +208,20 @@ def test_zero_padded_and_overflow_qnum_clamp(spark):
     docs = spark.createDataFrame(
         [("zp", spans)], schema=schema.DOCUMENT_SPANS_EXT
     )
-    per_engine = {}
-    for engine in ("packed", "partition", "grouped", "native"):
-        rows = pipeline.parse_raw(docs, engine=engine).collect()
-        per_engine[engine] = sorted(
-            (r.seq, r.question_number) for r in rows
+    per_engine = {
+        engine: sorted(
+            (r.seq, r.question_number)
+            for r in pipeline.extract_questions(docs, engine=engine).collect()
         )
+        for engine in ("packed", "native")
+    }
+    per_engine["twin"] = sorted(
+        (r[1], r[2])
+        for r in dkernel._parse_doc(
+            "zp", [s["kind"] for s in spans], [s["text"] for s in spans],
+            [s["media_ref"] for s in spans], [s["page"] for s in spans],
+        )
+    )
     vals = list(per_engine.values())
     assert all(v == vals[0] for v in vals), per_engine
     assert [n for _, n in vals[0]] == [5, 42, A.QNUM_CAP]

@@ -6,10 +6,6 @@ minimal line sequence)."""
 
 from hypothesis import given, settings, strategies as st
 
-from pdf_parser_python_spark.operators.kernel import segment_kernel
-from pdf_parser_python_spark.operators.pkernel import parse_partition
-from pdf_parser_python_spark.functions import anchors as A
-
 from .oracle import flatten_doc, run_reference
 
 # building blocks chosen to collide with every anchor/noise pattern
@@ -60,83 +56,6 @@ def _spans(items):
             "page": 1 + i // 7,
         })
     return out
-
-
-def _kernel_flat(spans):
-    """Run the shared FSM (pkernel path) in-process on one doc."""
-    import pandas as pd
-
-    rows = []
-    for s in spans:
-        if s["kind"] == "image":
-            rows.append(("f", "image", "", s["media_ref"], s["offset"], 0,
-                         s["page"]))
-        else:
-            for ln_no, ln in enumerate(s["text"].split("\n")):
-                t = ln.strip()
-                if not t or A.is_noise_line(t):
-                    continue
-                rows.append(("f", "text", t, "", s["offset"], ln_no,
-                             s["page"]))
-    pdf = pd.DataFrame(rows, columns=[
-        "doc_id", "kind", "text", "media_ref", "offset", "line_no", "page"])
-    out = []
-    for batch in parse_partition(iter([pdf])) if len(pdf) else []:
-        out.append(batch)
-    import pandas as pd2
-    if not out:
-        return []
-    all_rows = pd2.concat(out)
-    qs = []
-    for _, r in all_rows.sort_values("seq").iterrows():
-        if r["parse_failed"]:
-            continue
-        qs.append(_finalize_py(r))
-    return flatten_doc(qs)
-
-
-def _finalize_py(r):
-    """Python replica of the native finalize stage (only for fuzz
-    comparison — production finalize is Column-native)."""
-    import re as _re
-
-    opts = [o for o in r["options"]
-            if o["text"].strip() or o["images"]]
-    expl = r["explanation_text"]
-    if expl and A.is_noise_line(expl.strip()):
-        expl = ""
-    ans = r["answer_text"]
-    is_hot = r["question_type"] == "hotspot"
-    if ans.strip() and not is_hot:
-        up = ans.strip().upper()
-        if "," in up:
-            keys = set()
-            for part in up.split(","):
-                keys.update(_re.findall(r"\b([A-Z])\b", part))
-        else:
-            keys = set(_re.findall(r"[A-Z]", up))
-        valid = {o["key"].upper() for o in opts}
-        final = keys & valid if valid else keys
-        opts = [{**o, "is_correct": o["key"].upper() in final} for o in opts]
-    return {
-        "question_number": r["question_number"],
-        "question_text": r["question_text"],
-        "question_images": r["question_images"],
-        "options": opts,
-        "answer_text": ans,
-        "answer_images": r["answer_images"],
-        "explanation_text": expl,
-        "explanation_images": r["explanation_images"],
-    }
-
-
-@given(st.lists(SPAN, min_size=1, max_size=25))
-@settings(max_examples=300, deadline=None)
-def test_fuzz_kernel_matches_reference(items):
-    spans = _spans(items)
-    expected = flatten_doc(run_reference(spans))
-    got = _kernel_flat(spans)
-    assert got == expected
 
 
 def _arrays(spans):

@@ -6,21 +6,9 @@ span-identical output."""
 from pyspark.sql import functions as F
 
 from pdf_parser_python_spark import schema
-from pdf_parser_python_spark.operators import finalize
-from pdf_parser_python_spark.operators.flatten import flat_spans
 from pdf_parser_python_spark.operators.native import parse_native
 from pdf_parser_python_spark.plans import pipeline
 from pdf_parser_python_spark.sources.spans import generate_doc_spans
-
-
-def _flat(spark, docs, **kw):
-    raw = pipeline.parse_raw(docs, **kw)
-    rows = flat_spans(finalize.finalize_questions(raw)).collect()
-    return sorted(
-        (r.doc_id, r.seq, r.order, r.question_number, r.section, r.kind,
-         r.text, r.media_ref)
-        for r in rows
-    )
 
 
 def test_chunked_native_equals_packed_on_faulted_corpus(spark):
@@ -31,9 +19,10 @@ def test_chunked_native_equals_packed_on_faulted_corpus(spark):
         for i in range(10)
     ]
     docs = spark.createDataFrame(corpus, schema=schema.DOCUMENT_SPANS_EXT)
-    assert _flat(spark, docs, engine="packed") == _flat(
-        spark, docs, engine="native", chunk_size=7
-    )
+    packed = sorted(map(tuple, pipeline.extract_flat_spans(docs).collect()))
+    native = sorted(map(tuple, pipeline.extract_flat_spans(
+        docs, engine="native", chunk_size=7).collect()))
+    assert packed == native
 
 
 def _giant_lines(spark, n_questions: int, parts: int = 16):
@@ -208,7 +197,7 @@ def test_chunk_boundary_mid_question_sections_survive(spark):
     docs = spark.createDataFrame([("b", spans)],
                                  schema=schema.DOCUMENT_SPANS_EXT)
     for cs in (1, 2, 3):
-        q = pipeline.parse_raw(docs, engine="native", chunk_size=cs).first()
+        q = pipeline.parse_raw(docs, chunk_size=cs).first()
         assert q.options[0]["text"] == "first more option text", cs
         assert q.options[0]["images"] == ["img://x"], cs
         assert q.answer_text == "A" and q.explanation_text == "why", cs

@@ -1,7 +1,8 @@
 """Giant-document skew: one doc with ~100× the median span count must
-parse correctly through every engine and must not dominate wall-clock
+parse correctly through both engines and must not dominate wall-clock
 pathologically (the packed kernel streams it inside one Arrow row; the
-partition kernel streams it across Arrow batches)."""
+giant dispatch splits it into anchor-aligned chunks across Arrow
+batches)."""
 
 from pdf_parser_python_spark import schema
 from pdf_parser_python_spark.plans import pipeline
@@ -24,13 +25,8 @@ def test_giant_doc_correct_on_all_engines(spark):
     expected = {
         d: flatten_doc(run_reference(s)) for d, s in corpus
     }
-    for engine in ("packed", "partition"):
-        from pdf_parser_python_spark.operators import finalize
-        from pdf_parser_python_spark.operators.flatten import flat_spans
-
-        rows = flat_spans(
-            finalize.finalize_questions(pipeline.parse_raw(docs, engine=engine))
-        ).collect()
+    for engine in ("packed", "native"):
+        rows = pipeline.extract_flat_spans(docs, engine=engine).collect()
         by_doc: dict[str, list] = {d: [] for d, _ in corpus}
         for r in rows:
             by_doc[r.doc_id].append(r)
@@ -43,28 +39,31 @@ def test_giant_doc_correct_on_all_engines(spark):
             assert got == exp, (engine, d)
 
 
-def test_giant_doc_cross_batch_state(spark):
-    """Force tiny Arrow batches so the giant doc spans dozens of
-    batches in the partition kernel — state carry must hold."""
+def test_giant_doc_cross_batch_state(spark, monkeypatch):
+    """Force tiny Arrow batches and a lowered giant dispatch so the
+    giant doc is cut into anchor-aligned chunks that span several
+    batches of the chunked branch — the per-chunk seq carry must hold."""
     spans = generate_doc_spans(9002, mean_questions=6, giant_every=1)
     assert len(spans) > 2000
     docs = spark.createDataFrame(
         [("giant", spans)], schema=schema.DOCUMENT_SPANS_EXT
     )
+    monkeypatch.setattr(pipeline, "GIANT_CHUNK", 10)
+    whole = sorted(map(tuple, pipeline.extract_flat_spans(
+        docs, giant_doc_spans=None).collect()))
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
-        got = (
-            pipeline.extract_flat_spans(docs.repartition(1), engine="partition")
-            .count()
-        )
+        chunked = sorted(map(tuple, pipeline.extract_flat_spans(
+            docs.repartition(1), giant_doc_spans=len(spans) - 1).collect()))
     finally:
         if old:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
         else:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert chunked == whole
     expected = len(flatten_doc(run_reference(spans)))
-    assert got == expected
+    assert len(chunked) == expected
 
 
 def test_asof_hot_key_chunked_carry_equals_single_window(spark):
